@@ -29,7 +29,9 @@ import sys
 
 
 def _add_common(p: argparse.ArgumentParser) -> None:
-    p.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS])")
+    p.add_argument("--master", default=None,
+                   help="spark master (default local[$SPARK_GRAFT_CPUS], "
+                        "else local[<cores this process may use>])")
     p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument("--checkpoint-dir", default=None, help="CheckpointStore root")
     p.add_argument("--run-id", default="run0")

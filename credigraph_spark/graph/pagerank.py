@@ -16,33 +16,46 @@ Reference algorithm (pandas, single-threaded): tgrag/algorithms/pagerank.py
 
 Spark-first physical design (NOT a port of the per-node Python loop):
 
-* SPARSE state: only vertices with in-edges ("receivers") carry a rank
-  row; every non-receiver has the identical analytic rank
-  ``base + d*dangling/N``, so that population is one scalar + a count;
-* the dangling mass needs NO join: the dangling-receiver rank sum is
-  derived from an ``Observation`` over the contribution stream
-  (Σ contrib into dangling receivers is a running aggregate of the same
-  rows the superstep already scans), plus closed-form scalar terms;
-* exactly ONE driver action per superstep: the eager localCheckpoint of
-  the new state fills both observations (dangling mass on the
-  contribution stream, convergence L1 on the old⋈new join) and truncates
-  the plan, so lineage never grows across supersteps;
-* two physical modes:
-  - ``mode="shuffle"`` (default; state of any size): edges cached
-    hash-partitioned by ``src``; per superstep the (small) rank state
-    shuffles to the edges, contributions shuffle to ``groupBy(dst)``.
-    Hub-vertex skew handled by TARGETED two-phase salted aggregation —
-    only dsts with in-degree > hot_threshold get a real salt, so the
-    second aggregation re-shuffles ~|V| rows, not ~|E| (north rule:
-    explicit salting);
-  - ``mode="broadcast"`` (state fits executor memory — e.g. host-level
-    web graphs): edges cached hash-partitioned by ``dst``; the rank
-    state is broadcast, the contribution aggregation is partition-local
-    (ZERO shuffled rows per superstep) and the L1 join is co-partitioned.
-  ``mode="auto"`` picks broadcast when the receiver count is small.
-* per-superstep checkpoints (full vid,rank table) to the CheckpointStore:
-  durable resume + metrics + converged marker (resuming a converged run
-  short-circuits instead of burning an extra superstep).
+* ONE partition count P for every table and every exchange, measured
+  once from the input's row count (``adaptive_partitions``) unless the
+  caller pins ``num_partitions``. Set-up and loop run with AQE paused and
+  ``spark.sql.shuffle.partitions = P`` (``loop_tuning``), so every
+  exchange lands co-partitioned with the state.
+* STATE: one table ``(vid, dangling, coef, rank)`` of RECEIVERS —
+  vertices with at least one in-edge — hash-partitioned by ``vid``.
+  ``dangling`` flags receivers without out-edges. A non-receiver never
+  gets mass, so every non-receiver has the same rank
+  ``base + d*dangling/N``: one scalar and a count, no rows. Its
+  contribution into a receiver is that scalar times the receiver's
+  static ``coef`` = Σ 1/out_deg (w/W weighted) over its non-receiver
+  sources.
+* SET-UP is a handful of actions, each an ``eager_checkpoint``
+  partitioned at P: the clean edges ``(src, dst, c)`` with
+  ``c = 1/out_deg`` (``w/W``) partitioned by ``src``; the vertex flags
+  ``(vid, out, in_deg)``, whose Observation yields every count; the
+  state; and the receiver-sourced edges the loop scans.
+* SUPERSTEP (default mode): ONE exchange, two stages. The
+  receiver-sourced edges hash-join the state (build side) on ``src``
+  without an exchange; contributions aggregate by ``dst`` (the
+  exchange); a co-partitioned hash join back onto the state gives the
+  new rank. The convergence L1 (new vs the state's previous rank) and
+  the dangling mass Σ rank over dangling receivers are both observed on
+  that output, and its eager localCheckpoint is the superstep's only
+  driver action, truncating the lineage.
+* hub skew: ``salt_buckets > 0`` salts only dsts with in-degree above
+  ``hot_threshold`` (two-phase aggregation; the second phase
+  re-shuffles ~|V| rows, not ~|E|).
+* ``mode="broadcast"`` (state fits executor memory): edges partitioned
+  by ``dst`` and the state broadcast, so the contribution aggregation is
+  partition-local and a superstep exchanges no rows. ``mode="auto"``
+  picks broadcast when the receiver count is small.
+* CHECKPOINTS hold the full ``(vid, rank)`` table for ALL vertices
+  (every ``checkpoint_every`` supersteps and at the end), plus metrics
+  and a converged marker; the loop keeps its in-memory state. A resume
+  (or an ``init_ranks`` warm start) is one join of a ``(vid, rank)``
+  table onto the vertex flags while the state is built; its Observation
+  yields the non-receiver rank and the dangling sum. Resuming a
+  converged run returns the committed state.
 """
 
 from __future__ import annotations
@@ -64,6 +77,52 @@ from credigraph_spark.graph.adjacency import clean_edges, out_degrees
 # both 2 and 8 executors; at 5M it loses at both, and shuffle scales
 # 2->8 executors at 0.92 efficiency vs broadcast's 0.50.
 AUTO_BROADCAST_MAX_RECEIVERS = 2_000_000
+
+
+def _share_edges(edges: DataFrame, p: int, weight_col: str | None) -> DataFrame:
+    """Clean ``(src, dst, c)`` hash-partitioned by ``src`` into ``p``
+    partitions, ``c`` being the share of src's rank the edge carries:
+    1/out_deg (distinct successors) or w/W with W = Σ_v w(src, v). The
+    one exchange is the repartition: dedup and out-degree are then
+    partition-local.
+
+    The cleaning is ``clean_edges`` without its re-aliasing select: with
+    the partition key re-aliased above the repartition, the checkpoint
+    loses its partitioning and every later join on ``src`` would shuffle
+    the edges again."""
+    keep = (F.col("src").isNotNull() & F.col("dst").isNotNull()
+            & (F.col("src") != F.col("dst")))
+    if weight_col is not None:
+        w = F.col(weight_col).cast("double")
+        e = (edges.select("src", "dst", w.alias("w"))
+             .where(keep & F.col("w").isNotNull() & ~F.isnan("w") & (F.col("w") > 0))
+             .repartition(p, "src")
+             .groupBy("src", "dst").agg(F.sum("w").alias("w")))
+        total = e.groupBy(F.col("src").alias("vid")).agg(F.sum("w").alias("out_deg"))
+        share = F.col("w") / F.col("out_deg")
+    else:
+        e = (edges.select("src", "dst").where(keep).repartition(p, "src")
+             .dropDuplicates(["src", "dst"]))
+        total = out_degrees(e)
+        share = F.lit(1.0) / F.col("out_deg")
+    return (e.join(total.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
+            .select("src", "dst", share.alias("c")))
+
+
+def _vertex_flags(ed: DataFrame, vertices: DataFrame | None) -> DataFrame:
+    """``(vid, out, in_deg)`` for every vertex — the endpoints of ``ed``
+    plus the caller's extra vids (no edges either way) — hash-partitioned
+    by ``vid``."""
+    ends = (ed.select(F.col("src").alias("vid"), F.lit(True).alias("out"),
+                      F.lit(0).alias("ind"))
+            .unionByName(ed.select(F.col("dst").alias("vid"),
+                                   F.lit(False).alias("out"), F.lit(1).alias("ind"))))
+    if vertices is not None:
+        ends = ends.unionByName(vertices.select(
+            F.col(vertices.columns[0]).alias("vid"), F.lit(False).alias("out"),
+            F.lit(0).alias("ind")))
+    return ends.groupBy("vid").agg(F.max("out").alias("out"),
+                                   F.sum("ind").alias("in_deg"))
 
 
 def pagerank(
@@ -88,6 +147,7 @@ def pagerank(
     endpoints are always added (J10 semantics, pagerank_utils.py:124-138).
     ``mode``: "shuffle" | "broadcast" | "auto" (see module docstring).
     ``salt_buckets`` > 0 enables targeted salted aggregation (shuffle mode).
+    ``num_partitions``: pins P instead of measuring it.
     ``init_ranks``: optional (vid, rank) warm start — e.g. yesterday's
     converged ranks when today's edge table is an incremental update.
     Receivers present in it start from their previous rank (new vertices
@@ -100,338 +160,178 @@ def pagerank(
     Parallel edges are collapsed by SUMMING the weight (vs the
     unweighted keep-first dedup); null/NaN/non-positive weights are
     dropped. Everything else — dangling handling (uniform 1/N restart),
-    sparse state, modes, salting, Observations, checkpoints — is shared
-    with the unweighted path, whose plan is untouched.
+    state, modes, salting, Observations, checkpoints — is shared with
+    the unweighted path: only the per-edge share ``c`` differs.
     """
-    spark = edges.sparkSession
-    shuffle_n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    if weight_col is not None:
-        w = F.col(weight_col).cast("double")
-        e = (
-            edges.select("src", "dst", w.alias("w"))
-            .where(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                   & (F.col("src") != F.col("dst"))
-                   & F.col("w").isNotNull() & ~F.isnan("w") & (F.col("w") > 0))
-            .groupBy("src", "dst").agg(F.sum("w").alias("w"))
-        )
-        # out_deg carries the TOTAL outgoing weight (the contribution
-        # divisor), not the successor count
-        deg = e.groupBy(F.col("src").alias("vid")).agg(F.sum("w").alias("out_deg"))
-    else:
-        e = clean_edges(edges)
-        deg = out_degrees(e)
-
-    # receivers (have in-edges) carry sparse state, flagged with
-    # dangling = no out-edges; both sets are static across supersteps.
-    # deg is persisted for the setup's lifetime: it feeds recv_flags,
-    # nonrecv AND the edges_deg join — uncached, each of those re-ran the
-    # full |E|-row degree aggregation (measured ~1 s per extra scan at
-    # bench scale).
-    deg = deg.persist()
-    receivers = e.select(F.col("dst").alias("vid")).distinct()
-    # localCheckpoint (not persist): materialized once, plan truncated, and
-    # the blocks are GC-tied to this function's lifetime — no cached blocks
-    # leak across repeated calls in a long-lived session.
-    recv_flags = (
-        receivers.join(deg, "vid", "left")
-        .select("vid", F.col("out_deg").isNull().alias("dangling"))
-        .repartition(shuffle_n, "vid")
-        .transform(eager_checkpoint)
-    )
-    stats = recv_flags.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("dangling"), 1).otherwise(0)).alias("d"),
-    ).collect()[0]
-    n_recv, n_recv_dangling = stats["n"], stats["d"] or 0
-
-    if mode == "auto":
-        mode = "broadcast" if n_recv <= AUTO_BROADCAST_MAX_RECEIVERS else "shuffle"
-    if mode not in ("shuffle", "broadcast"):
+    if mode not in ("shuffle", "broadcast", "auto"):
         raise ValueError(f"unknown mode: {mode}")
+    spark = edges.sparkSession
+    with aqe_paused(spark):
+        p = num_partitions or adaptive_partitions(edges.count())
+        with loop_tuning(spark, p):
+            ed = eager_checkpoint(_share_edges(edges, p, weight_col))
+            is_recv = F.col("in_deg") > 0
+            obs_v = Observation("pagerank_vertices")
+            vt = eager_checkpoint(_vertex_flags(ed, vertices).observe(
+                obs_v, F.count("*").alias("n"), F.sum("in_deg").alias("edges"),
+                F.count(F.when(is_recv, 1)).alias("recv"),
+                F.count(F.when(~F.col("out"), 1)).alias("dangling"),
+                F.count(F.when(~is_recv & ~F.col("out"), 1)).alias("isolated")))
+            counts = obs_v.get
+            n, n_recv = counts["n"], counts["recv"]
+            # every non-receiver from the edge list contributes (has
+            # out-edges), so only extra isolated vids are non-receiver AND
+            # dangling
+            m, m_dangling = n - n_recv, counts["isolated"]
+            if mode == "auto":
+                mode = ("broadcast" if n_recv <= AUTO_BROADCAST_MAX_RECEIVERS
+                        else "shuffle")
+            info: dict = {
+                "n_vertices": n, "n_receivers": n_recv, "n_nonreceivers": m,
+                "n_dangling": counts["dangling"], "mode": mode,
+                "iterations": 0, "converged": n <= 0, "l1_history": [],
+                "n_edges": counts["edges"] or 0,
+            }
+            if n == 0:
+                return vt.select("vid", F.lit(0.0).alias("rank")), info
 
-    # non-receivers = contributors (deg keys) and user-supplied extras not
-    # in the receiver set (NOTE: avoids a union+distinct over 2x|E| endpoint
-    # rows — contributors are already the distinct src set). The receiver
-    # side reads the checkpointed recv_flags, not the raw |E|-row distinct.
-    recv_vids = recv_flags.select("vid")
-    nonrecv = deg.select("vid").join(recv_vids, "vid", "left_anti")
-    extra_isolated = None
-    if vertices is not None:
-        extra = vertices.select(F.col(vertices.columns[0]).alias("vid")).distinct()
-        extra_nonrecv = extra.join(recv_vids, "vid", "left_anti")
-        nonrecv = nonrecv.unionByName(extra_nonrecv).distinct()
-        extra_isolated = extra_nonrecv.join(deg.select("vid"), "vid", "left_anti")
-    nonrecv = nonrecv.transform(eager_checkpoint)
-    m = nonrecv.count()
-    # every non-receiver from the edge list contributes (has out-edges), so
-    # only user-supplied isolated vertices are non-receiver AND dangling.
-    m_dangling = extra_isolated.count() if extra_isolated is not None else 0
+            seed, it = None, 0
+            if ckpt is not None and resume:
+                done = ckpt.converged_iteration()
+                if done is not None:
+                    # already-converged run: return the converged state
+                    # verbatim — an extra superstep would drift it by < tol
+                    info.update(iterations=done + 1, converged=True, resumed_from=done)
+                    return ckpt.read_state(spark, done), info
+                last = ckpt.latest_iteration()
+                if last is not None:
+                    seed, it = ckpt.read_state(spark, last), last + 1
+                    info["resumed_from"] = last
+            if seed is None and init_ranks is not None:
+                # duplicate vids in a user-supplied warm start would
+                # duplicate state rows and double-count mass: collapse
+                # deterministically before the seeding join
+                seed = init_ranks.groupBy("vid").agg(F.max("rank").alias("rank"))
+                info["warm_start"] = True
 
-    n = n_recv + m
-    info: dict = {
-        "n_vertices": n, "n_receivers": n_recv, "n_nonreceivers": m,
-        "n_dangling": n_recv_dangling + m_dangling, "mode": mode,
-        "iterations": 0, "converged": n <= 0, "l1_history": [],
-    }
-    if n == 0:
-        return recv_flags.select("vid", F.lit(0.0).alias("rank")), info
+            # the static in-contribution of non-receiver sources, per dst
+            recv_src = vt.where(is_recv).select(F.col("vid").alias("src")).hint("shuffle_hash")
+            coef = (ed.join(recv_src, "src", "left_anti")
+                    .groupBy(F.col("dst").alias("vid")).agg(F.sum("c").alias("coef")))
+            rows = vt.withColumn("rank", F.lit(1.0 / n))
+            if seed is not None:
+                obs_s = Observation("pagerank_seed")
+                rows = (
+                    vt.join(seed.select("vid", F.col("rank").cast("double").alias("seed"))
+                            .hint("shuffle_hash"), "vid", "left")
+                    .withColumn("rank", F.coalesce("seed", F.lit(1.0 / n)))
+                    .observe(obs_s,
+                             F.sum(F.when(is_recv, F.col("rank"))).alias("recv"),
+                             F.sum(F.when(is_recv & ~F.col("out"), F.col("rank")))
+                             .alias("dangling"),
+                             F.max(F.when(~is_recv, F.col("rank"))).alias("nonrecv")))
+            state = eager_checkpoint(
+                rows.where(is_recv).join(coef.hint("shuffle_hash"), "vid", "left")
+                .select("vid", (~F.col("out")).alias("dangling"),
+                        F.coalesce("coef", F.lit(0.0)).alias("coef"), "rank"))
 
-    # static per-edge flags: contribution sink is a dangling receiver
-    # (feeds the observed dangling-mass sum), and - in shuffle mode -
-    # whether the dst is HOT (gets a real salt).
-    dang_dsts = recv_flags.where("dangling").select(F.col("vid").alias("dst"))
-    edges_deg = (
-        e.join(deg.withColumnRenamed("vid", "src"), "src")
-        .join(F.broadcast(dang_dsts.withColumn("dst_dangling", F.lit(True))), "dst", "left")
-        .withColumn("dst_dangling", F.coalesce("dst_dangling", F.lit(False)))
-    )
-    if mode == "shuffle" and salt_buckets > 0:
-        hot = (
-            e.groupBy("dst").agg(F.count("*").alias("in_deg"))
-            .where(F.col("in_deg") > hot_threshold)
-            .select("dst", F.lit(True).alias("is_hot"))
-        )
-        edges_deg = edges_deg.join(F.broadcast(hot), "dst", "left").withColumn(
-            "is_hot", F.coalesce("is_hot", F.lit(False))
-        )
-    # broadcast mode partitions edges by dst so the contribution
-    # aggregation is partition-local (no shuffle at all per superstep).
-    part_key = "dst" if mode == "broadcast" else "src"
-    # measure the edge count first, then size the loop partitioning from
-    # it (scale-adaptive) unless the caller pinned num_partitions
-    edges_deg0 = edges_deg.persist()
-    info["n_edges"] = edges_deg0.count()
-    if num_partitions is None:
-        shuffle_n = adaptive_partitions(info["n_edges"])
-    edges_deg = edges_deg0.repartition(shuffle_n, part_key).persist()
-    edges_deg.count()
-    edges_deg0.unpersist()
-    deg.unpersist()
-    base = (1.0 - damping) / n
+            default = 1.0 / n  # the rank every non-receiver shares
+            dangling_sum = info["n_dangling"] * default
+            if "resumed_from" in info:
+                s = obs_s.get
+                if m > 0:
+                    default = s["nonrecv"]
+                dangling_sum = (s["dangling"] or 0.0) + m_dangling * default
+            elif seed is not None:
+                # the seeded state MUST be renormalized to total mass 1: a
+                # mass error has no graph structure to mix it away and
+                # decays at exactly the damping rate, i.e. an unnormalized
+                # warm start is WORSE than cold
+                s = obs_s.get
+                scale = 1.0 / ((s["recv"] or 0.0) + m * default)
+                state = eager_checkpoint(state.withColumn("rank", F.col("rank") * scale))
+                default *= scale
+                dangling_sum = (s["dangling"] or 0.0) * scale + m_dangling * default
 
-    # STATIC/DYNAMIC SPLIT: a source that is not a receiver never gets
-    # mass, so its rank is the scalar ``default`` in EVERY superstep and
-    # its per-edge contribution is default x a STATIC coefficient. Those
-    # edges are pre-aggregated ONCE into a per-dst coefficient vector
-    # (|receivers| rows) + one dangling scalar, and the superstep scans
-    # only receiver-sourced edges — at bench scale 590k -> 30k rows per
-    # iteration, and at web scale the never-linked-to fringe drops out of
-    # every round. Float effect: the static addends are re-grouped
-    # (default*sum(coef) vs sum(default*coef)), ~1e-16 relative — the
-    # same pair-sum order noise the 8dp output rounding already absorbs
-    # (see q_pagerank_timedecay note).
-    dyn, sv, sd_static = edges_deg, None, 0.0
-    if m > 0:
-        recv_src = recv_flags.select(F.col("vid").alias("src"))
-        if mode == "broadcast":
-            recv_src = F.broadcast(recv_src)
-        else:
-            recv_src = recv_src.hint("shuffle_hash")
-        coef_expr = (F.col("w") / F.col("out_deg")) if weight_col is not None \
-            else (F.lit(1.0) / F.col("out_deg"))
-        # the static dangling scalar rides the sv checkpoint's own job as
-        # an Observation — no separate aggregate action
-        sv_obs = Observation("pr_static_dangling")
-        sv = eager_checkpoint(
-            edges_deg.join(recv_src, "src", "anti")
-            .groupBy("dst")
-            .agg(F.sum(coef_expr).alias("coef"),
-                 F.max("dst_dangling").alias("dst_dangling"))
-            .repartition(shuffle_n, "dst")
-            .observe(sv_obs,
-                     F.sum(F.when(F.col("dst_dangling"), F.col("coef"))
-                           .otherwise(0.0)).alias("sd")))
-        sd_static = sv_obs.get["sd"] or 0.0
-        dyn = edges_deg.join(recv_src, "src", "semi").persist()
-        dyn.count()
-        edges_deg.unpersist()
-
-    def full_rank(sparse: DataFrame, default: float) -> DataFrame:
-        out = sparse.select("vid", "rank")
-        if m > 0:
-            out = out.unionByName(nonrecv.select("vid", F.lit(default).alias("rank")))
-        return out
-
-    # -- initial / resumed state ------------------------------------------
-    start_iter = 0
-    sparse = None
-    default = 1.0 / n
-    dangling_sum = info["n_dangling"] * (1.0 / n)  # analytic under uniform init
-    if ckpt is not None and resume:
-        done = ckpt.converged_iteration()
-        if done is not None:
-            # already-converged run: return the converged state verbatim —
-            # an extra superstep would drift the result by < tol.
-            dyn.unpersist()
-            info.update(iterations=done + 1, converged=True, resumed_from=done)
-            return ckpt.read_state(spark, done), info
-        last = ckpt.latest_iteration()
-        if last is not None:
-            full = ckpt.read_state(spark, last)
-            sparse = (
-                full.join(recv_flags.select("vid"), "vid", "left_semi")
-                .repartition(shuffle_n, "vid")
-                .persist()
-            )
-            if m > 0:
-                default = full.join(nonrecv, "vid", "left_semi").select("rank").first()["rank"]
-            recv_dang = (
-                full.join(recv_flags.where("dangling"), "vid", "left_semi")
-                .agg(F.sum("rank")).collect()[0][0] or 0.0
-            )
-            dangling_sum = recv_dang + m_dangling * default
-            start_iter = last + 1
-            info["resumed_from"] = last
-    if sparse is None and init_ranks is not None:
-        # warm start: previous ranks where known, 1/N for new receivers.
-        # The seeded state MUST be renormalized to total mass 1: a mass
-        # error has no graph structure to mix it away and decays at
-        # exactly the damping rate (0.85/superstep) — slower than most
-        # graphs' natural convergence, i.e. an unnormalized warm start is
-        # WORSE than cold. One seeding shuffle + one aggregate (the
-        # aggregate also yields the dangling sum, as in resume).
-        # duplicate vids in a user-supplied warm start would duplicate
-        # receiver state rows and double-count mass (ADVICE r3) — collapse
-        # deterministically (max) before the seeding join.
-        init_dedup = init_ranks.groupBy("vid").agg(F.max("rank").alias("rank"))
-        seeded = (
-            recv_flags.select("vid", "dangling")
-            .join(init_dedup, "vid", "left")
-            .select("vid", "dangling",
-                    F.coalesce("rank", F.lit(1.0 / n)).alias("rank"))
-        )
-        sums = seeded.agg(
-            F.sum("rank").alias("total"),
-            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dang"),
-        ).collect()[0]
-        scale = 1.0 / (sums["total"] + m * default)
-        sparse = (
-            seeded.select("vid", (F.col("rank") * scale).alias("rank"))
-            .repartition(shuffle_n, "vid")
-            .persist()
-        )
-        default *= scale
-        dangling_sum = sums["dang"] * scale + m_dangling * default
-        info["warm_start"] = True
-    if sparse is None:
-        sparse = recv_flags.select("vid", F.lit(1.0 / n).alias("rank")).persist()
-
-    converged = info["converged"]
-    it = start_iter
-    with loop_tuning(spark, shuffle_n):
-        while it < max_iter and not converged:
-            t0 = time.time()
-            rank_by_src = sparse.select(F.col("vid").alias("src"), "rank")
+            # the loop scans only receiver-sourced edges: a non-receiver's
+            # contribution is the static ``coef`` above
+            dyn = ed.join(recv_src, "src", "left_semi")
+            salted = mode == "shuffle" and salt_buckets > 0
+            if salted:
+                hot = (vt.where(F.col("in_deg") > hot_threshold)
+                       .select(F.col("vid").alias("dst"), F.lit(True).alias("hot")))
+                dyn = (dyn.join(F.broadcast(hot), "dst", "left")
+                       .select("src", "dst", "c",
+                               F.when(F.col("hot"), F.pmod(F.xxhash64("src"),
+                                                           F.lit(salt_buckets)))
+                               .otherwise(F.lit(0)).alias("salt")))
             if mode == "broadcast":
-                joined = dyn.join(F.broadcast(rank_by_src), "src", "left")
-            else:
-                joined = dyn.join(rank_by_src, "src", "left")
-            if weight_col is not None:
-                c = (F.coalesce(F.col("rank"), F.lit(default))
-                     * F.col("w") / F.col("out_deg")).alias("c")
-            else:
-                c = (F.coalesce(F.col("rank"), F.lit(default)) / F.col("out_deg")).alias("c")
+                # partitioned by dst, the contribution sum is partition-local
+                dyn = dyn.repartition(p, "dst")
+            dyn = eager_checkpoint(dyn)
 
-            # the dangling-receiver contribution sum rides along as an
-            # observation on rows the superstep scans anyway — no extra join.
-            obs = Observation(f"pr_dangling_{it}")
-            if mode == "shuffle" and salt_buckets > 0:
-                stream = joined.select(
-                    "dst", c, "dst_dangling",
-                    F.when(F.col("is_hot"), F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
-                    .otherwise(F.lit(0)).alias("_salt"),
-                ).observe(obs, F.sum(F.when(F.col("dst_dangling"), F.col("c"))
-                                     .otherwise(0.0)).alias("dc"))
-                contribs = (
-                    stream.groupBy("dst", "_salt").agg(F.sum("c").alias("c"))
-                    .groupBy("dst").agg(F.sum("c").alias("contrib"))
-                )
-            else:
-                stream = joined.select("dst", c, "dst_dangling").observe(
-                    obs, F.sum(F.when(F.col("dst_dangling"), F.col("c"))
-                               .otherwise(0.0)).alias("dc"))
-                contribs = stream.groupBy("dst").agg(F.sum("c").alias("contrib"))
-            if sv is not None:
-                # add the static coefficient vector (dsts fed only by
-                # non-receiver sources appear via the full outer side);
-                # both sides are hash(dst)-partitioned at shuffle_n, so
-                # the join adds no exchange
-                contribs = (
-                    contribs.join(sv.select("dst", "coef")
-                                  .hint("shuffle_hash"), "dst", "full_outer")
-                    .select("dst",
-                            (F.coalesce("contrib", F.lit(0.0))
-                             + F.lit(default) * F.coalesce("coef", F.lit(0.0))
-                             ).alias("contrib"))
-                )
+            nonrecv = vt.where(~is_recv).select("vid")
 
-            default_new = base + damping * (dangling_sum / n)
-            # ONE driver action: the eager localCheckpoint materializes the new
-            # sparse state, truncates the plan (no growth across supersteps),
-            # and fills BOTH observations — the dangling-contribution sum on
-            # the contribution stream and the sparse L1 on the old⋈new join
-            # (receiver sets are identical across supersteps, so the inner
-            # join drops nothing).
-            obs_l1 = Observation(f"pr_l1_{it}")
-            new_sparse = (
-                contribs.select(
-                    F.col("dst").alias("vid"),
-                    (F.lit(base) + F.lit(damping) * (
-                        F.col("contrib") + F.lit(dangling_sum / n)
-                    )).alias("rank"),
-                )
-                .join(sparse.select("vid", F.col("rank").alias("prev")), "vid")
-                .observe(obs_l1, F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"))
-                .select("vid", "rank")
-                .transform(eager_checkpoint)
-            )
-            l1_sparse = obs_l1.get["l1"] or 0.0
-            dang_contrib = (obs.get["dc"] or 0.0) + default * sd_static
-            l1 = l1_sparse + m * abs(default_new - default)
-            # Σ_{v∈DR} rank_new(v) = |DR|·default_new + d·Σ_{e→DR} c(e)
-            next_dangling = (
-                n_recv_dangling * default_new
-                + damping * dang_contrib
-                + m_dangling * default_new
-            )
-            sparse.unpersist()
-            sparse = new_sparse
-            default = default_new
-            converged = l1 < tol
-            it += 1
-            info["iterations"] = it
-            info["l1_history"].append(l1)
+            def full_rank(state: DataFrame, default: float) -> DataFrame:
+                out = state.select("vid", "rank")
+                if m > 0:
+                    out = out.unionByName(nonrecv.select("vid", F.lit(default).alias("rank")))
+                return out
 
-            if ckpt is not None and (converged or it % checkpoint_every == 0 or it >= max_iter):
-                full = ckpt.write_state(full_rank(sparse, default), it - 1)
-                ckpt.append_metrics(
-                    it - 1,
-                    {"algo": "pagerank", "l1_diff": l1, "dangling_mass": dangling_sum,
-                     "wall_ms": (time.time() - t0) * 1e3, "rows": n,
-                     "converged": converged},
-                )
-                if converged:
-                    ckpt.mark_converged(it - 1)
-                # release the just-localCheckpointed blocks before swapping
-                # in the truncated re-read (else they accumulate until GC)
-                sparse.unpersist()
-                sparse = (
-                    full.join(recv_flags.select("vid"), "vid", "left_semi")
-                    .repartition(shuffle_n, "vid").persist()
-                )
-            dangling_sum = next_dangling
+            base = (1.0 - damping) / n
+            converged = False
+            while it < max_iter and not converged:
+                t0 = time.time()
+                ranks = state.select(F.col("vid").alias("src"), "rank")
+                ranks = F.broadcast(ranks) if mode == "broadcast" else ranks.hint("shuffle_hash")
+                flow = dyn.join(ranks, "src")
+                c = (F.col("rank") * F.col("c")).alias("c")
+                if salted:
+                    contribs = (flow.select("dst", "salt", c)
+                                .groupBy("dst", "salt").agg(F.sum("c").alias("c"))
+                                .groupBy("dst").agg(F.sum("c").alias("contrib")))
+                else:
+                    contribs = flow.select("dst", c).groupBy("dst").agg(
+                        F.sum("c").alias("contrib"))
+                new_rank = F.lit(base) + F.lit(damping) * (
+                    F.coalesce("contrib", F.lit(0.0)) + F.lit(default) * F.col("coef")
+                    + F.lit(dangling_sum / n))
+                # ONE driver action: the eager localCheckpoint of the new
+                # state fills the L1 and the next superstep's dangling mass
+                obs = Observation(f"pagerank_superstep_{it}")
+                state = eager_checkpoint(
+                    state.join(contribs.withColumnRenamed("dst", "vid").hint("shuffle_hash"),
+                               "vid", "left")
+                    .select("vid", "dangling", "coef", new_rank.alias("rank"),
+                            F.col("rank").alias("prev"))
+                    .observe(obs, F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"),
+                             F.sum(F.when(F.col("dangling"), F.col("rank"))
+                                   .otherwise(0.0)).alias("dangling"))
+                    .drop("prev"))
+                default_new = base + damping * (dangling_sum / n)
+                l1 = (obs.get["l1"] or 0.0) + m * abs(default_new - default)
+                dangling_used = dangling_sum
+                dangling_sum = (obs.get["dangling"] or 0.0) + m_dangling * default_new
+                default = default_new
+                converged = l1 < tol
+                it += 1
+                info["iterations"] = it
+                info["l1_history"].append(l1)
 
-    info["converged"] = converged
-    # materialize before releasing the caches: full_rank reads the
-    # sparse state cache AND re-derives the non-receiver table from
-    # edges_deg, so the caller's first action would re-run both after
-    # the unpersist (and `sparse` previously leaked its persist)
-    result = full_rank(sparse, default).transform(eager_checkpoint)
-    if sparse is not None:
-        sparse.unpersist()
-    dyn.unpersist()
-    return result, info
+                if ckpt is not None and (converged or it % checkpoint_every == 0
+                                         or it >= max_iter):
+                    ckpt.write_state(full_rank(state, default), it - 1)
+                    ckpt.append_metrics(
+                        it - 1,
+                        {"algo": "pagerank", "l1_diff": l1, "dangling_mass": dangling_used,
+                         "wall_ms": (time.time() - t0) * 1e3, "rows": n,
+                         "converged": converged},
+                    )
+                    if converged:
+                        ckpt.mark_converged(it - 1)
+
+            info["converged"] = converged
+            return full_rank(state, default), info
 
 
 def opic(edges: DataFrame, rounds: int = 3) -> DataFrame:

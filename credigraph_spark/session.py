@@ -174,6 +174,14 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
         return ck
 
 
+def default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, else one task thread per core this
+    process may run on (its CPU affinity, which a container or
+    ``taskset`` may narrow below the machine's core count)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "credigraph-spark",
     master: str | None = None,
@@ -182,8 +190,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults applied."""
     builder = SparkSession.builder.appName(app_name)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = builder.master(master or f"local[{cpus}]")
+    builder = builder.master(master or default_master())
     conf = dict(_DEFAULTS)
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

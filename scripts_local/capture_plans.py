@@ -7,8 +7,11 @@ import io
 import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -567,7 +570,7 @@ def main():
                      + grep(p, "Window |hashpartitioning\\(user_id")
                      .strip()[:500]))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("# PLANS — physical-plan spot checks (.explain evidence)\n\n")
         f.write("Captured from executed plans at small scale; the properties\n"
                 "(pushdown, pruning, broadcast choice, codegen coverage, the\n"
@@ -577,15 +580,37 @@ def main():
             f.write(f"## {title}\n\n```\n{body.strip()}\n```\n\n")
         f.write("""## Iterative superstep plans (PageRank)
 
-* shuffle mode: cached edges hash-partitioned by `src` (exchange reuse);
-  per superstep only the sparse rank state is exchanged; contributions use
-  targeted two-phase salted aggregation.
-* broadcast mode: cached edges hash-partitioned by `dst`; rank state
-  broadcast; contribution aggregation partition-local (no exchange).
+* state: one table `(vid, dangling, coef, rank)` of receivers (vertices
+  with an in-edge), hash-partitioned by `vid` into one partition count P,
+  measured once and used by every table and exchange; `coef` is the
+  static in-contribution of non-receiver sources (Σ 1/out_deg, or w/W),
+  and every non-receiver shares one scalar rank.
+* shuffle mode, one exchange and two stages per superstep: the
+  checkpointed receiver-sourced edges `(src, dst, 1/out_deg)` (partitioned
+  by `src`) hash-join the state on `src`, state as build side, with no
+  exchange; contributions aggregate by `dst` (the exchange); a
+  co-partitioned hash join back onto the state gives the new rank:
+
+      Project
+      +- CollectMetrics pagerank_superstep_<i>   (L1 and dangling mass)
+         +- ShuffledHashJoin LeftOuter BuildRight    (state ⋈ contribs on vid)
+            :- Scan ExistingRDD                       (state)
+            +- HashAggregate
+               +- Exchange hashpartitioning(dst, P)
+                  +- HashAggregate (partial)
+                     +- ShuffledHashJoin Inner BuildRight   (edges ⋈ state on src)
+                        :- Scan ExistingRDD             (edges)
+                        +- Scan ExistingRDD             (state)
+
+* the dangling mass for the next superstep, Σ rank over dangling
+  receivers, is observed on the new state together with the L1.
+* salted (`salt_buckets > 0`): hot dsts take a two-phase aggregation, a
+  second exchange over ~|V| rows.
+* broadcast mode: edges partitioned by `dst`, the state broadcast;
+  contribution aggregation partition-local (no exchange).
 * ONE driver action per superstep in all three algorithms: the eager
   localCheckpoint materializes the state and fills the Observations
-  (PageRank: dangling mass + L1; CC/LPA: changed count) — see the
-  CollectMetrics node above riding the superstep plan.
+  (PageRank: L1 + dangling mass; CC/LPA: changed count).
 * AQE is PAUSED inside superstep loops (session.aqe_paused): static stage
   shapes gain nothing from runtime re-planning and its per-job latency
   (~0.5 s/superstep measured) dominates the serial floor.

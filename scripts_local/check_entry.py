@@ -11,8 +11,11 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 import duckdb  # noqa: E402
 

@@ -18,8 +18,11 @@ import struct
 import sys
 import time
 from decimal import Decimal
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 import duckdb  # noqa: E402
 

@@ -3,32 +3,69 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from credigraph_spark.checkpoint import CheckpointStore
 from credigraph_spark.graph import connected_components, pagerank
+from credigraph_spark.oracles import pagerank_oracle
 
 from tests.conftest import edges_df
 
 EDGES = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (5, 0), (6, 5), (7, 6), (8, 7)]
 
 
-def test_pagerank_resume_matches_uninterrupted(spark, tmp_path):
-    full_ranks, full_info = pagerank(edges_df(spark, EDGES), max_iter=16)
+# every mode shares the receiver state, so each must resume from the
+# durable (vid, rank) checkpoint; hot_threshold=1 salts vertex 0
+RESUME_MODES = {
+    "shuffle": {},
+    "broadcast": {"mode": "broadcast"},
+    "salted": {"salt_buckets": 4, "hot_threshold": 1},
+    "weighted": {"weight_col": "w"},
+}
+
+
+def _edges(spark, kw):
+    if "weight_col" not in kw:
+        return edges_df(spark, EDGES)
+    return spark.createDataFrame([(a, b, float(1 + (a + b) % 3)) for a, b in EDGES],
+                                 "src long, dst long, w double")
+
+
+@pytest.mark.parametrize("kw", list(RESUME_MODES.values()), ids=list(RESUME_MODES))
+def test_pagerank_resume_matches_uninterrupted(spark, tmp_path, kw):
+    full_ranks, full_info = pagerank(_edges(spark, kw), max_iter=16, **kw)
     full = {r["vid"]: r["rank"] for r in full_ranks.collect()}
 
     # phase 1: run only 6 supersteps, checkpointing every 2 ("the kill")
     ck = CheckpointStore(str(tmp_path / "pr"), "run1")
-    pagerank(edges_df(spark, EDGES), max_iter=6, ckpt=ck, checkpoint_every=2)
+    pagerank(_edges(spark, kw), max_iter=6, ckpt=ck, checkpoint_every=2, **kw)
     assert ck.latest_iteration() == 5
     assert len(ck.read_metrics()) >= 3
 
     # phase 2: resume from the committed superstep and finish
-    ranks2, info2 = pagerank(edges_df(spark, EDGES), max_iter=16, ckpt=ck,
-                             checkpoint_every=2, resume=True)
+    ranks2, info2 = pagerank(_edges(spark, kw), max_iter=16, ckpt=ck,
+                             checkpoint_every=2, resume=True, **kw)
     assert info2["resumed_from"] == 5
     got = {r["vid"]: r["rank"] for r in ranks2.collect()}
     vids = sorted(full)
     np.testing.assert_allclose([got[v] for v in vids], [full[v] for v in vids], atol=1e-9)
+
+
+def test_pagerank_resumes_from_plain_rank_table(spark, tmp_path):
+    """The durable checkpoint format is a plain (vid, rank) table over
+    ALL vertices: a table committed by other code — here the oracle's
+    ranks after 5 supersteps — resumes like one PageRank wrote."""
+    state, _, _ = pagerank_oracle(EDGES, max_iter=5)
+    ck = CheckpointStore(str(tmp_path / "plain"), "run1")
+    ck.write_state(spark.createDataFrame(sorted(state.items()), "vid long, rank double"), 4)
+
+    ranks, info = pagerank(edges_df(spark, EDGES), max_iter=16, ckpt=ck)
+    want, iterations, _ = pagerank_oracle(EDGES, max_iter=16)
+    assert info["resumed_from"] == 4 and info["iterations"] == iterations
+    got = {r["vid"]: r["rank"] for r in ranks.collect()}
+    vids = sorted(want)
+    assert sorted(got) == vids
+    np.testing.assert_allclose([got[v] for v in vids], [want[v] for v in vids], atol=1e-9)
 
 
 def test_cc_resume(spark, tmp_path):

@@ -8,6 +8,7 @@ extracted synthetic corpus end-to-end.
 from __future__ import annotations
 
 import random
+import re
 
 import numpy as np
 import pytest
@@ -179,3 +180,56 @@ def test_warm_start_duplicate_vids_not_double_counted(spark):
     want = {r["vid"]: r["rank"] for r in cold.collect()}
     assert all(abs(r["rank"] - want[r["vid"]]) < 1e-9 for r in rows)
     assert abs(sum(r["rank"] for r in rows) - 1.0) < 1e-9
+
+
+def _superstep_jobs(spark, group: str) -> list[tuple[str, list[int]]]:
+    """(physical plan, job ids) of every PageRank superstep run under job
+    group ``group``: the SQL executions whose plan observes the
+    convergence L1, read from the live status stores."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    # job and SQL events reach the status stores through the listener bus
+    jsc.listenerBus().waitUntilEmpty()
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for i in range(executions.size()):
+        ex = executions.apply(i)
+        plan = ex.physicalPlanDescription()
+        keys = ex.jobs().keys().iterator()
+        jobs = []
+        while keys.hasNext():
+            jobs.append(int(keys.next()))
+        if re.search(r"\bAS l1#\d+", plan) and jobs and set(jobs) <= in_group:
+            out.append((plan, jobs))
+    return out
+
+
+def test_superstep_stage_budget(spark, tmp_path):
+    """Default mode: every superstep is one job of exactly two stages —
+    one exchange — over checkpointed tables: no sort-merge join, no sort,
+    and no re-scan of the parquet input."""
+    rnd = random.Random(5)
+    path = str(tmp_path / "edges")
+    edges_df(spark, [(rnd.randrange(30), rnd.randrange(30)) for _ in range(150)]
+             ).write.parquet(path)
+    sc = spark.sparkContext
+    group = "test-superstep-stage-budget"
+    sc.setJobGroup(group, "pagerank stage budget")
+    try:
+        _, info = pagerank(spark.read.parquet(path), max_iter=4, tol=0.0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    supersteps = _superstep_jobs(spark, group)
+    assert len(supersteps) == info["iterations"] == 4
+
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    for plan, jobs in supersteps:
+        assert len(jobs) == 1
+        stages = [sid for sid in tracker.getJobInfo(jobs[0]).stageIds
+                  if store.lastStageAttempt(sid).status().toString() != "SKIPPED"]
+        assert len(stages) == 2, plan
+        tree = plan.split("\n\n")[0]
+        assert "SortMergeJoin" not in tree and not re.search(r"\bSort\b", tree), tree
+        assert not re.search(r"FileScan|BatchScan|\bScan (?!ExistingRDD)", tree), tree
